@@ -112,7 +112,7 @@ def lang_id(col: Column) -> Column:
             if not text:
                 out.append("und")
                 continue
-            counts = [0, 0, 0, 0, 0]
+            counts = [0] * len(langs)
             for t in text.lower().split():
                 hit = get(t)
                 if hit:

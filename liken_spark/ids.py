@@ -59,12 +59,8 @@ def with_row_id(df: DataFrame, col_name: str = ROW_ID, materialize: bool = True)
     base = df.withColumn(_MID, F.monotonically_increasing_id()).withColumn(
         _PID, F.spark_partition_id()
     )
-    # an input that is itself persisted already freezes its partition
-    # layout (cache blocks are written once; mid/pid are pure functions of
-    # the cached partitions), so a second cache on top would only re-store
-    # the same rows — skip it and let the count below ride the input cache.
-    if materialize and not df.is_cached:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    if materialize:
+        base = freeze_ids(df, base)
     counts = base.groupBy(_PID).count().collect()
 
     offsets: dict[int, int] = {}
@@ -93,6 +89,21 @@ def with_row_id(df: DataFrame, col_name: str = ROW_ID, materialize: bool = True)
     # a dedicated counting job. Advisory: does not survive transformations.
     out._liken_row_count = acc
     return out
+
+
+def freeze_ids(src: DataFrame, stamped: DataFrame) -> DataFrame:
+    """Persist ``stamped`` (``src`` plus partition/position-derived id
+    columns) so every consumer observes the same ids.
+
+    An input persisted WITH a disk tier already freezes its partition
+    layout (its blocks are written once and never evicted; the ids are pure
+    functions of the cached partitions), so a second cache on top would
+    only re-store the same rows — ``stamped`` is returned as is. A
+    memory-only cache can evict blocks, and a recomputed nondeterministic
+    source may reorder rows, so it still gets its own persist."""
+    if src.is_cached and src.storageLevel.useDisk:
+        return stamped
+    return stamped.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def init_canonical(df: DataFrame, id: str | None) -> DataFrame:

@@ -2,26 +2,38 @@
 
 Unlike the reference-parity pipeline API (which *chains* dedupers,
 rewriting canonical_id between steps — the reference's sequential
-semantics, executor.py:89-101), this job unions the candidate pairs of all
-three passes (exact, MinHash-LSH, suffix-window substring) and runs ONE
+semantics, executor.py:89-101), this job unions the candidate pairs of two
+passes (MinHash-LSH and suffix-window substring) and runs ONE
 connected-components pass. That is both cheaper (one CC, one canonical
 join, no intermediate windows) and transitively complete: a~b via LSH and
 b~c via substring land in one cluster even when no single pass links them.
 
-Optionally checkpointed per stage (see sources/checkpoint.py) for
-mid-run resume.
+Exact duplicates need no pass of their own: identical text has an identical
+MinHash signature, so it shares a bucket in every band, and LSH hashes null
+as "" — the LSH pairs already link a superset of the exact pairs.
+
+Physical shape: one narrow cached frame ``(row_id, id, text, band keys)``
+is pinned by a single observed pass, which also returns the row counts and
+the mean id width the gates need. Both pair passes read that cache with no
+further pin, so every Spark job after the pin does pair, CC or join work.
+
+For per-stage checkpointing and mid-run resume see
+sources/checkpoint.checkpointed_dedup.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from liken_spark.constants import CANONICAL_ID, ROW_ID
-from liken_spark.ids import with_row_id
+from liken_spark.constants import CANONICAL_ID, ROW_ID, TMP_PREFIX
+from liken_spark.ids import freeze_ids
 from liken_spark.operators.cc import connected_components
 from liken_spark.operators.dedupers import LshSpec
-from liken_spark.operators.executor import _apply_comp_df
 from liken_spark.operators.textdedup import SubstringSpec
+
+_BANDS = TMP_PREFIX + "bands"
+_COMP = TMP_PREFIX + "comp"
+_CANON = TMP_PREFIX + "canon"
 
 
 def dedup_corpus(
@@ -32,175 +44,82 @@ def dedup_corpus(
     lsh_ngram: int = 3,
     num_perm: int = 128,
     substring_min_len: int = 30,
-    use_exact: bool = True,
-    use_lsh: bool = True,
-    use_substring: bool = True,
     deterministic_source: bool = True,
 ) -> DataFrame:
     """df + canonical_id (first-seen id per near-dup cluster). The payload
-    columns never enter the pair/CC shuffles — only (row_id, text) does.
+    columns never enter the pair/CC shuffles — only (row_id, id, text)
+    does.
 
+    Row ids are ``monotonically_increasing_id()``: strictly increasing in
+    partition/position order, so each component's minimum is its
+    first-seen row, as with a contiguous index, without a counting pass.
     ``deterministic_source=True`` (file/Iceberg-backed input, the
-    north-star contract) skips row-id materialization entirely: pair
-    generation reads ONLY the pruned text column from the scan; the
-    payload is scanned once, for the final canonical join. Pass False for
-    arbitrarily-shuffled in-memory inputs."""
-    from liken_spark.operators.cc import (
-        defer_eager_persists,
-        materialize_concurrently,
-        materialize_concurrently_counting,
-    )
+    north-star contract) recomputes them per scan: pair generation reads
+    ONLY the pruned text and id columns, and the payload is scanned once,
+    for the final canonical join. Pass False for arbitrarily-shuffled
+    in-memory inputs: the id-stamped input is then frozen by
+    ``ids.freeze_ids`` so every consumer sees the same ids."""
+    base = df if ROW_ID in df.columns else df.withColumn(ROW_ID, F.monotonically_increasing_id())
+    if not deterministic_source:
+        base = freeze_ids(df, base)
+    lsh = LshSpec(threshold=lsh_threshold, ngram=lsh_ngram, num_perm=num_perm)
+    sub = SubstringSpec(min_len=substring_min_len)
 
-    base = with_row_id(df, materialize=not deterministic_source)
-    narrow = base.select(ROW_ID, text_col)
-    # the pair generators' per-row work (signature UDF, window hashing)
-    # runs before any exchange, so its parallelism is the input partition
-    # count — spread a narrow input once (row ids are already assigned;
-    # no-op at scale where partitions >= cores)
+    narrow = base.select(ROW_ID, id_col, text_col)
+    # the signature UDF runs before any exchange, so its parallelism is
+    # the input partition count — spread a narrow input once (no-op at
+    # scale where partitions >= cores)
     cores = df.sparkSession.sparkContext.defaultParallelism
     if narrow.rdd.getNumPartitions() < cores:
         narrow = narrow.repartition(cores)
-    narrow = narrow.persist()
-    # The shared narrow frame must be materialized BEFORE the pair
-    # generators: all three passes read it, AQE runs their branch jobs
-    # concurrently, and a not-yet-built cache is silently recomputed per
-    # branch (see cc.scoped_persist). Instead of a dedicated pinning count
-    # (a pure-overhead serial job — the measured round-3 regression), the
-    # exact pass's tiny dup-roots aggregate doubles as the pin: its map
-    # side computes narrow's partitions with a single consumer (no race)
-    # while doing useful work.
-    # A/B instrumentation knobs (default = the measured-best config):
-    # LIKEN_SPARK_PIN_ROOTS=0 reverts to a bare narrow.count() pin + lazy
-    # exact-roots; LIKEN_SPARK_PIN_CONCURRENT=0 materializes the deferred
-    # band/window frames serially.
-    import os as _os
+    narrow = narrow.withColumn(_BANDS, lsh.bands_column(F.col(text_col))).persist()
+    # The pin: the LSH and substring branches both read `narrow`, and AQE
+    # runs their jobs concurrently — a not-yet-built cache is silently
+    # recomputed per branch (see cc.scoped_persist). One observed noop
+    # write builds the cache (MinHash UDF included) with a single consumer
+    # and returns every statistic the later gates need — one job with no
+    # exchange, where an aggregate needs a map stage plus a result stage.
+    obs = Observation()
+    narrow.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.length(text_col) >= substring_min_len, 1)).alias("n_sub"),
+        # octet_length, not length: broadcast cost is bytes, and multibyte
+        # UTF-8 ids undercount up to 4x by chars
+        F.coalesce(F.avg(F.octet_length(F.col(id_col).cast("string"))), F.lit(0.0)).alias("w"),
+    ).write.format("noop").mode("overwrite").save()
+    stats = obs.get
 
-    pin_roots = _os.environ.get("LIKEN_SPARK_PIN_ROOTS", "1") != "0"
-    pin_concurrent = _os.environ.get("LIKEN_SPARK_PIN_CONCURRENT", "1") != "0"
-    overlap_roots = _os.environ.get("LIKEN_SPARK_OVERLAP_ROOTS", "1") != "0"
-    pair_sets = []
-    roots_ckpt = None
-    if use_exact:
-        # group on a 128-bit hash of the text, not the text itself: the
-        # exact pass then shuffles 16-byte keys instead of full transcripts
-        # (at corpus scale the dominant shuffle-byte term). False-merge
-        # probability is n^2/2^129 — ~4e-15 even at 10^12 rows.
-        hkey = F.struct(
-            F.xxhash64(F.col(text_col)).alias("h1"),
-            F.xxhash64(F.col(text_col), F.lit(1)).alias("h2"),
-        )
-        hashed = narrow.select(F.col(ROW_ID), hkey.alias("hk"))
-        roots = (
-            hashed.groupBy("hk")
-            .agg(F.min(ROW_ID).alias("src"), F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") > 1)
-        )
-        if pin_roots:
-            # lazy checkpoint + count: ONE job both truncates lineage and
-            # returns the dup-group cardinality the broadcast gate needs
-            roots_ckpt = roots.localCheckpoint(eager=False)
-            if overlap_roots:
-                narrow.count()
-                n_roots = None  # overlap mode: counted concurrently below
-            else:
-                # the roots materialization doubles as narrow's cache pin
-                n_roots = roots_ckpt.count()
-        else:
-            # A/B baseline arm: bare pin, lazy un-checkpointed roots
-            narrow.count()
-            roots_ckpt, n_roots = roots, None
-    else:
-        narrow.count()
-    # The LSH band frame and the substring window frame are independent
-    # children of the (now materialized) narrow frame — defer their eager
-    # pins and run the two counts as CONCURRENT jobs instead of two serial
-    # ones (each count is its frame's only consumer, so the caching is
-    # race-free; the cheap substring filter scan overlaps the expensive
-    # MinHash UDF pass). In overlap mode the exact-roots checkpoint joins
-    # the same concurrent batch — it reads only the already-pinned narrow
-    # frame, so racing it against the band/window counts is cache-safe and
-    # hides its shuffle behind the long-pole MinHash UDF pass.
-    with defer_eager_persists() as pending:
-        if use_lsh:
-            pair_sets.append(
-                LshSpec(threshold=lsh_threshold, ngram=lsh_ngram, num_perm=num_perm).gen_pairs(
-                    narrow, text_col, []
-                )
-            )
-        if use_substring:
-            pair_sets.append(
-                SubstringSpec(min_len=substring_min_len).gen_pairs(narrow, text_col, [])
-            )
-    # canonical-map broadcast gate stats (used after CC, computed NOW so
-    # the job can ride the concurrent pin batch): estimated bytes of the
-    # (row_id, canonical_id) map — octet_length, not length, because
-    # broadcast cost is bytes and multibyte UTF-8 ids undercount up to 4x
-    # by chars. Reads only the pruned id column of the source scan, so it
-    # is independent of every pinned frame and race-free to overlap.
-    ids = base.select(ROW_ID, F.col(id_col)).withColumn(CANONICAL_ID, F.col(id_col))
+    lsh_pairs = lsh.pairs_from_banded(
+        narrow.select(ROW_ID, F.posexplode(_BANDS).alias("band", "key"))
+    )
+    sub_pairs = sub.pairs_from(
+        narrow.select(ROW_ID, F.col(text_col).alias("t")).where(
+            F.length("t") >= substring_min_len
+        ),
+        int(stats["n_sub"]),
+    )
+    comps = connected_components(lsh_pairs.union(sub_pairs))
 
-    def _id_stats():
-        row = ids.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.avg(F.octet_length(F.col(id_col).cast("string"))), F.lit(0.0)
-            ).alias("w"),
-        ).collect()[0]
-        return int(row["n"]), float(row["w"])
-
-    stats = None
-    if use_exact and pin_roots and overlap_roots:
-        from concurrent.futures import ThreadPoolExecutor
-
-        jobs = (
-            [roots_ckpt.count] + [p.count for p in pending] + [_id_stats]
-        )
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            results = [f.result() for f in [ex.submit(j) for j in jobs]]
-        n_roots, stats = results[0], results[-1]
-    elif pin_concurrent:
-        materialize_concurrently(pending)
-    else:
-        for p in pending:
-            p.count()
-
-    if use_exact:
-        roots_final = roots_ckpt
-        if pin_roots:
-            # the checkpointed frame has no Catalyst stats, so AQE would
-            # plan a shuffle join however small it is (the measured r4
-            # defect). Force the broadcast ONLY under a byte gate: one row
-            # per duplicate text group (~64B: 16B hk + 8B src + 8B c + row
-            # overhead) can reach n/2 rows on a heavily-duplicated corpus —
-            # an ungated broadcast there is a driver OOM. Above the 256MB
-            # cap the plain shuffle join AQE picks for stats-less frames is
-            # the right plan anyway.
-            if n_roots * 64 <= (256 << 20):
-                roots_final = F.broadcast(roots_ckpt)
-        pair_sets.append(
-            hashed.join(roots_final, "hk")
-            .where(F.col(ROW_ID) != F.col("src"))
-            .select("src", F.col(ROW_ID).alias("dst"))
-        )
-
-    pairs = pair_sets[0]
-    for p in pair_sets[1:]:
-        pairs = pairs.union(p)
-
-    comps = connected_components(pairs)
-    # canonical assignment on the NARROW (row_id, id) frame; the cluster
-    # map (one row per corpus row, two small values) joins back onto the
-    # payload columns. Below the 256MB byte gate we force a broadcast so
-    # the wide payload never shuffles at all; beyond that the planner
-    # shuffles both sides — one payload shuffle total, the unavoidable
-    # floor. (A 20M-row corpus of wide string ids would be a multi-GB
-    # broadcast — hence bytes, not rows.)
-    canon_map = _apply_comp_df(ids, comps, keep="first").select(ROW_ID, CANONICAL_ID)
-    if stats is None:
-        stats = _id_stats()
-    n_ids, w_ids = stats
-    if n_ids * (28 + w_ids) <= (256 << 20):
-        canon_map = F.broadcast(canon_map)
-    out = base.join(canon_map, ROW_ID)
+    # keep="first": canonical = id at the component's minimum row id, and
+    # ``comp`` IS that minimum (cc contract) — so the (row_id, canonical)
+    # remap covers dup-cluster members only; every other row keeps its own
+    # id. Below the 256MB byte gate (estimated over ALL rows, an upper
+    # bound on both the member list and the remap) both are broadcast: the
+    # CC output carries no size statistics, and the wide payload never
+    # shuffles. Above it the planner shuffles both sides once — the
+    # unavoidable floor.
+    small = stats["n"] * (28 + stats["w"]) <= (256 << 20)
+    members = comps.where(F.col("node") != F.col("comp")).select(
+        F.col("node").alias(ROW_ID), F.col("comp").alias(_COMP)
+    )
+    rep_vals = base.select(F.col(ROW_ID).alias(_COMP), F.col(id_col).alias(_CANON))
+    remap = rep_vals.join(F.broadcast(members) if small else members, _COMP)
+    if small:
+        remap = F.broadcast(remap)
+    out = base.join(remap, ROW_ID, "left").withColumn(
+        CANONICAL_ID,
+        F.when(F.col(_COMP).isNull(), F.col(id_col)).otherwise(F.col(_CANON)),
+    )
     narrow.unpersist()
-    return out.drop(ROW_ID)
+    return out.drop(ROW_ID, _COMP, _CANON)

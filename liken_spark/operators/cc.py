@@ -40,10 +40,6 @@ Physical notes:
 
 from __future__ import annotations
 
-import threading
-from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, functions as F
 
 # Persisted intermediates registered by pair generators. The next
@@ -56,60 +52,6 @@ from pyspark.sql import DataFrame, functions as F
 # at the end of execution. Single-session assumption, like the rest of the
 # engine.
 _SCOPED_PERSISTS: list[DataFrame] = []
-
-# When set (via ``defer_eager_persists``), eager scoped persists are NOT
-# counted inline — they are queued here for the caller to materialize, so a
-# batch of INDEPENDENT frames can be pinned by concurrent count jobs instead
-# of one serial job each. Deferral is only safe when (a) every deferred
-# frame's persisted ancestors are already materialized (else the concurrent
-# counts race on the shared parent cache — the exact defect eager
-# materialization exists to prevent) and (b) the deferred frames do not read
-# each other. ``jobs.dedup_corpus`` is the canonical user: it pins the
-# shared narrow text frame first, then defers the per-pass band/window
-# frames, which are independent children of it.
-#
-# The deferral stack is THREAD-LOCAL: two dedup jobs built on different
-# driver threads must not interleave their pending-pin queues (one job
-# counting — or stranding — the other's frames). _SCOPED_PERSISTS above
-# stays process-global deliberately: its ownership transfer is
-# plan-build-order based and the engine documents a single-threaded-session
-# assumption for pipeline execution; the deferral mechanism is the one
-# piece exercised from worker threads (materialize_concurrently), so it
-# gets the stronger guarantee.
-_DEFERRED_TLS = threading.local()
-
-
-@contextmanager
-def defer_eager_persists():
-    """Collect eager scoped persists instead of counting them inline; the
-    caller materializes the yielded list (see ``materialize_concurrently``)."""
-    prev = getattr(_DEFERRED_TLS, "pending", None)
-    pending: list[DataFrame] = []
-    _DEFERRED_TLS.pending = pending
-    try:
-        yield pending
-    finally:
-        _DEFERRED_TLS.pending = prev
-
-
-def materialize_concurrently(dfs: list[DataFrame]) -> None:
-    """Pin a batch of independent persisted frames with concurrent count
-    jobs (Spark job submission is thread-safe; each frame's count is its
-    only consumer at this point, so first-writer-wins caching is safe)."""
-    materialize_concurrently_counting(dfs)
-
-
-def materialize_concurrently_counting(dfs: list[DataFrame]) -> list[int]:
-    """``materialize_concurrently`` that also returns each frame's row
-    count, so callers can fuse a cardinality probe (e.g. a broadcast-gate
-    count) into the same concurrent pin batch instead of paying a separate
-    serial job for it."""
-    if not dfs:
-        return []
-    if len(dfs) == 1:
-        return [dfs[0].count()]
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        return list(ex.map(lambda f: f.count(), dfs))
 
 
 def scoped_persist_count(df: DataFrame) -> tuple[DataFrame, int]:
@@ -138,11 +80,7 @@ def scoped_persist(df: DataFrame, eager: bool = True) -> DataFrame:
     df.persist()
     _SCOPED_PERSISTS.append(df)
     if eager:
-        pending = getattr(_DEFERRED_TLS, "pending", None)
-        if pending is not None:
-            pending.append(df)
-        else:
-            df.count()
+        df.count()
     return df
 
 

@@ -236,11 +236,9 @@ class LshSpec(ThresholdMixin, PairsDeduper):
         self._num_perm = num_perm
         self._salt = salt
 
-    def _banded(self, scope: DataFrame, columns: Columns, preprocessors: list[Preprocessor]) -> DataFrame:
-        """(ROW_ID, band, key) exploded band frame, scoped-persisted: the
-        consuming plans branch several ways and the MinHash UDF is the most
-        expensive node — without the cache it would run once per branch.
-        (ROW_ID, band, key) is ~24 bytes/row."""
+    def bands_column(self, col: Column) -> Column:
+        """``array<long>`` of the b band keys of ``col``'s MinHash signature
+        (Arrow-batched UDF; null text hashes as "")."""
         b, r = optimal_param(self._threshold, self._num_perm)
         ngram, num_perm = self._ngram, self._num_perm
 
@@ -262,14 +260,24 @@ class LshSpec(ThresholdMixin, PairsDeduper):
                 out.append(band_hashes(sig, b, r).tolist())
             return pd.Series(out)
 
+        return bands_udf(col)
+
+    def _banded(self, scope: DataFrame, columns: Columns, preprocessors: list[Preprocessor]) -> DataFrame:
+        """(ROW_ID, band, key) exploded band frame, scoped-persisted: the
+        consuming plans branch several ways and the MinHash UDF is the most
+        expensive node — without the cache it would run once per branch.
+        (ROW_ID, band, key) is ~24 bytes/row."""
         col = self.prepared_column(scope, columns, preprocessors)
         return scoped_persist(
-            scope.select(F.col(ROW_ID), F.posexplode(bands_udf(col)).alias("band", "key"))
+            scope.select(F.col(ROW_ID), F.posexplode(self.bands_column(col)).alias("band", "key"))
         )
 
     def gen_pairs(self, scope: DataFrame, columns: Columns, preprocessors: list[Preprocessor]) -> DataFrame:
-        d = self._banded(scope, columns, preprocessors)
+        return self.pairs_from_banded(self._banded(scope, columns, preprocessors))
 
+    def pairs_from_banded(self, d: DataFrame) -> DataFrame:
+        """Star edges from an exploded (ROW_ID, band, key) frame; ``d`` is
+        read by several branches, so callers pass a cache-backed frame."""
         # two-level salted star aggregation: local min per (band, key, salt),
         # then global min per (band, key). Edges bridge members -> local
         # roots (within the salted sub-group) and local roots -> global root

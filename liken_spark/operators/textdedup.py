@@ -102,14 +102,19 @@ class SubstringSpec(PairsDeduper):
         L = self._min_len
         col = self.prepared_column(scope, columns, preprocessors)
         # the pin count doubles as the row count the cap-unfirable check
-        # below needs (one driver action either way)
+        # in pairs_from needs (one driver action either way)
         d, n_d = scoped_persist_count(
             scope.select(F.col(ROW_ID), col.alias("t")).where(F.length("t") >= L)
         )
+        return self.pairs_from(d, n_d)
 
+    def pairs_from(self, d: DataFrame, n_d: int) -> DataFrame:
+        """Containment pairs over a cache-backed (ROW_ID, t) frame holding
+        only rows with ``length(t) >= min_len``; ``n_d`` is its row count."""
+        L = self._min_len
         # The key join and the hot-key aggregation shuffle ONLY (id, key)
-        # int64 pairs — never the text. Candidate (ni, hi) id pairs are
-        # deduped first, then each side's text joins back once (from the
+        # int64 pairs — never the text. Each candidate (ni, hi) id pair
+        # occurs once, then each side's text joins back once (from the
         # persisted narrow frame, hash join on the int id) for the exact
         # ``contains`` verification. At corpus scale this is the difference
         # between shuffling ~16 bytes and ~kilobytes per emitted window.
@@ -198,11 +203,12 @@ class SubstringSpec(PairsDeduper):
                 .where(F.col("_hot").isNull())
                 .drop("_hot")
             )
+        # no .distinct(): each needle emits one key and each haystack's
+        # keys are array_distinct, so every (ni, hi) occurs at most once
         cand = (
             needles.join(haystacks, "key")
             .where(F.col("ni") != F.col("hi"))
             .select("ni", "hi")
-            .distinct()
         )
         pairs = (
             cand.join(d.select(F.col(ROW_ID).alias("ni"), F.col("t").alias("ntext")), "ni")

@@ -2,8 +2,9 @@
 
 Defaults favor the engine's workload: AQE on (skew-join + partition
 coalescing cover moderate band skew at runtime), Arrow enabled for every
-pandas-UDF kernel, and a shuffle-partition count sized from the
-parallelism. All knobs are overridable.
+pandas-UDF kernel, a shuffle-partition count sized from the
+parallelism, and a codegen cache that a repeated query always hits. All
+knobs are overridable.
 """
 
 from __future__ import annotations
@@ -32,6 +33,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("LIKEN_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # A repeated query must hit the compiled-codegen cache. Spark's
+        # default holds 100 classes (4 LRU segments of 25), fewer than one
+        # audio dedup iteration generates (~80-100 across pairs, CC and
+        # join-back), and a whole-stage class name embeds the stage id,
+        # which AQE assigns in the order concurrent stages finish. Either
+        # way a repeat recompiled a timing-dependent share of its classes.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -104,6 +104,25 @@ def test_substring_operator(spark):
     assert canon == [0, 0, 2, 3]
 
 
+@pytest.mark.parametrize("winnow", [8, None])
+def test_substring_pairs_unique_when_haystack_repeats_needle(spark, winnow):
+    """A haystack holding the needle's window several times still yields
+    the (needle, haystack) pair exactly once: each needle emits one key and
+    each haystack's keys are distinct, so no dedup pass is needed."""
+    from liken_spark.ids import with_row_id
+    from liken_spark.operators import cc as cc_mod
+    from liken_spark.operators.textdedup import SubstringSpec
+
+    needle = "the quick brown fox jumps over the lazy dog"
+    rows = [(needle,), (" | ".join([needle] * 4),), ("nothing in common with the other rows at all",)]
+    d = with_row_id(spark.createDataFrame(rows, "t string"))
+    try:
+        got = [(r["src"], r["dst"]) for r in SubstringSpec(30, winnow=winnow).gen_pairs(d, "t", []).collect()]
+    finally:
+        cc_mod.release_scoped_persists()
+    assert got == [(0, 1)]
+
+
 def test_simhash_operator(spark):
     # simhash bit flips scale with the *fraction* of tokens changed, so use
     # a long document with one edited token

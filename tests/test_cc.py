@@ -66,44 +66,6 @@ def test_optimal_param_reasonable():
         assert abs(midpoint - t) < 0.2
 
 
-def test_deferred_concurrent_materialization(spark):
-    """defer_eager_persists queues eager pins instead of counting inline;
-    materialize_concurrently pins them all; a subsequent CC pass takes
-    ownership and releases every registered frame."""
-    from pyspark.sql import functions as F
-
-    from liken_spark.operators import cc as ccmod
-    from liken_spark.operators.cc import (
-        defer_eager_persists,
-        materialize_concurrently,
-        scoped_persist,
-    )
-
-    assert ccmod._SCOPED_PERSISTS == []
-    base = spark.range(1000).select(F.col("id"), (F.col("id") % 10).alias("k")).persist()
-    base.count()
-    with defer_eager_persists() as pending:
-        a = scoped_persist(base.select("id", (F.col("id") % 7).alias("h")))
-        b = scoped_persist(base.select("id", (F.col("k") * 2).alias("h2")))
-    assert pending == [a, b]
-    # nothing counted inline: both frames still register as persisted but
-    # the deferral must not have dropped them from the scoped registry
-    assert ccmod._SCOPED_PERSISTS == [a, b]
-    materialize_concurrently(pending)
-    assert a.count() == 1000 and b.count() == 1000
-
-    # a CC pass over pairs derived from the pinned frames releases them
-    pairs = (
-        a.join(b, "id")
-        .where(F.col("h") == F.col("h2"))
-        .select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
-    )
-    comps = connected_components(pairs)
-    comps.count()
-    assert ccmod._SCOPED_PERSISTS == []
-    base.unpersist()
-
-
 def test_scoped_persist_count_registers_and_counts(spark):
     from liken_spark.operators import cc as ccmod
     from liken_spark.operators.cc import release_scoped_persists, scoped_persist_count
@@ -113,6 +75,21 @@ def test_scoped_persist_count_registers_and_counts(spark):
     assert ccmod._SCOPED_PERSISTS[-1] is df
     release_scoped_persists()
     assert ccmod._SCOPED_PERSISTS == []
+
+
+def test_cc_releases_owned_persists_on_success(spark):
+    """A CC pass takes ownership of the scoped persists registered before
+    it and releases them once its output is materialized."""
+    from pyspark.sql import functions as F
+
+    from liken_spark.operators import cc as ccmod
+    from liken_spark.operators.cc import scoped_persist
+
+    owned = scoped_persist(spark.range(10).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst")))
+    comps = connected_components(owned)
+    assert {r["comp"] for r in comps.collect()} == {0}
+    assert ccmod._SCOPED_PERSISTS == []
+    assert owned.storageLevel.useMemory is False
 
 
 def test_cc_releases_persists_on_failure(spark):

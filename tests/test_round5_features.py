@@ -1,15 +1,11 @@
 """Round-5 regressions: the SimHash collapse probe, the substring cap
-observation, the tfidf self-row-free top-n, and thread-local pin deferral."""
+observation, the tfidf self-row-free top-n, and dedup_corpus's exact class."""
 
 from __future__ import annotations
 
-import threading
-
-from pyspark.sql import functions as F
-
 import liken_spark as lk
 from liken_spark.ids import with_row_id
-from liken_spark.operators.cc import connected_components, defer_eager_persists
+from liken_spark.operators.cc import connected_components
 from liken_spark.operators.dedupers import TfidfSpec
 from liken_spark.operators.textdedup import SimHashSpec, SubstringSpec
 
@@ -141,49 +137,17 @@ def test_tfidf_topn_without_self_rows_matches_reference_semantics(spark):
     assert got == {(0, 1), (1, 0), (2, 0), (2, 1)}
 
 
-def test_defer_eager_persists_is_thread_local(spark):
-    """Two driver threads deferring pins concurrently must not interleave
-    their queues."""
-    from liken_spark.operators import cc as cc_mod
-
-    results: dict[str, list] = {}
-    barrier = threading.Barrier(2)
-
-    def worker(name: str):
-        with defer_eager_persists() as pending:
-            barrier.wait()
-            df = spark.range(3).withColumn("w", F.lit(name))
-            cc_mod.scoped_persist(df)
-            barrier.wait()
-            results[name] = list(pending)
-
-    ts = [threading.Thread(target=worker, args=(n,)) for n in ("a", "b")]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    try:
-        assert len(results["a"]) == 1 and len(results["b"]) == 1
-        assert results["a"][0] is not results["b"][0]
-    finally:
-        cc_mod.release_scoped_persists()
-
-
-def test_dedup_corpus_overlap_knob_equivalence(spark, monkeypatch):
-    """LIKEN_SPARK_OVERLAP_ROOTS on/off is a physical-plan choice only:
-    identical canonical maps, and the roots broadcast gate fires (small
-    corpus => broadcast side taken) without error in both modes."""
+def test_dedup_corpus_exact_class_without_exact_pass(spark):
+    """dedup_corpus has no exact pass: LSH alone (identical text, identical
+    signature) must map a 6-copy exact class to its first member, whether
+    row ids are recomputed per scan or frozen by a persist."""
     from liken_spark.jobs import dedup_corpus
 
     rows = [(f"clip{i}", f"some transcript body number {i} padded out for realism",) for i in range(40)]
     rows += [(f"dup{i}", "a repeated transcript shared by several clips in this corpus",) for i in range(6)]
     df = spark.createDataFrame(rows, "clip_id string, transcript string")
 
-    outs = {}
-    for knob in ("1", "0"):
-        monkeypatch.setenv("LIKEN_SPARK_OVERLAP_ROOTS", knob)
-        out = dedup_corpus(df, deterministic_source=False)
-        outs[knob] = {r["clip_id"]: r["canonical_id"] for r in out.collect()}
-    assert outs["1"] == outs["0"]
-    dup_canons = {outs["1"][f"dup{i}"] for i in range(6)}
-    assert dup_canons == {"dup0"}
+    for deterministic_source in (True, False):
+        out = dedup_corpus(df, deterministic_source=deterministic_source)
+        canon = {r["clip_id"]: r["canonical_id"] for r in out.collect()}
+        assert {canon[f"dup{i}"] for i in range(6)} == {"dup0"}
