@@ -17,11 +17,20 @@ is pinned by a single observed pass, which also returns the row counts and
 the mean id width the gates need. Both pair passes read that cache with no
 further pin, so every Spark job after the pin does pair, CC or join work.
 
-For per-stage checkpointing and mid-run resume see
-sources/checkpoint.checkpointed_dedup.
+With a ``StageCheckpointer`` every stage boundary is written, read back
+and checksummed, so a killed run resumes from the last complete stage
+(``sources.checkpoint.checkpointed_dedup`` is the entry point):
+
+- ``00_ingest``: ``(row_id, id, text)``, before the bands and the pin;
+- ``02_lsh_pairs``: distinct LSH ``(src, dst)`` edges;
+- ``03_substring_pairs``: substring ``(src, dst)`` edges;
+- ``04_components``: the CC ``(node, comp)`` assignment;
+- ``05_canonical_map``: ``(id, canonical_id)`` for dup-cluster members.
 """
 
 from __future__ import annotations
+
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
@@ -30,6 +39,9 @@ from liken_spark.ids import freeze_ids
 from liken_spark.operators.cc import connected_components
 from liken_spark.operators.dedupers import LshSpec
 from liken_spark.operators.textdedup import SubstringSpec
+
+if TYPE_CHECKING:
+    from liken_spark.sources.checkpoint import StageCheckpointer
 
 _BANDS = TMP_PREFIX + "bands"
 _COMP = TMP_PREFIX + "comp"
@@ -45,6 +57,7 @@ def dedup_corpus(
     num_perm: int = 128,
     substring_min_len: int = 30,
     deterministic_source: bool = True,
+    ckpt: StageCheckpointer | None = None,
 ) -> DataFrame:
     """df + canonical_id (first-seen id per near-dup cluster). The payload
     columns never enter the pair/CC shuffles — only (row_id, id, text)
@@ -58,14 +71,26 @@ def dedup_corpus(
     ONLY the pruned text and id columns, and the payload is scanned once,
     for the final canonical join. Pass False for arbitrarily-shuffled
     in-memory inputs: the id-stamped input is then frozen by
-    ``ids.freeze_ids`` so every consumer sees the same ids."""
+    ``ids.freeze_ids`` so every consumer sees the same ids.
+
+    ``ckpt`` checkpoints every stage boundary (module docstring); the
+    checkpoints are narrow, never the payload."""
+    params = (
+        f"lsh={lsh_threshold}/{lsh_ngram}/{num_perm};sub={substring_min_len};"
+        f"text={text_col};id={id_col}"
+    )
+
+    def stage(name: str, frame: DataFrame) -> DataFrame:
+        return frame if ckpt is None else ckpt.materialize(name, frame, params)
+
     base = df if ROW_ID in df.columns else df.withColumn(ROW_ID, F.monotonically_increasing_id())
     if not deterministic_source:
         base = freeze_ids(df, base)
     lsh = LshSpec(threshold=lsh_threshold, ngram=lsh_ngram, num_perm=num_perm)
     sub = SubstringSpec(min_len=substring_min_len)
 
-    narrow = base.select(ROW_ID, id_col, text_col)
+    ingest = stage("00_ingest", base.select(ROW_ID, id_col, text_col))
+    narrow = ingest
     # the signature UDF runs before any exchange, so its parallelism is
     # the input partition count — spread a narrow input once (no-op at
     # scale where partitions >= cores)
@@ -93,13 +118,22 @@ def dedup_corpus(
     lsh_pairs = lsh.pairs_from_banded(
         narrow.select(ROW_ID, F.posexplode(_BANDS).alias("band", "key"))
     )
-    sub_pairs = sub.pairs_from(
-        narrow.select(ROW_ID, F.col(text_col).alias("t")).where(
-            F.length("t") >= substring_min_len
+    if ckpt is not None:
+        # a member reached through several bands repeats its star edge;
+        # CC deduplicates edges anyway, so only a stored copy pays for the
+        # extra exchange
+        lsh_pairs = lsh_pairs.distinct()
+    lsh_pairs = stage("02_lsh_pairs", lsh_pairs)
+    sub_pairs = stage(
+        "03_substring_pairs",
+        sub.pairs_from(
+            narrow.select(ROW_ID, F.col(text_col).alias("t")).where(
+                F.length("t") >= substring_min_len
+            ),
+            int(stats["n_sub"]),
         ),
-        int(stats["n_sub"]),
     )
-    comps = connected_components(lsh_pairs.union(sub_pairs))
+    comps = stage("04_components", connected_components(lsh_pairs.union(sub_pairs)))
 
     # keep="first": canonical = id at the component's minimum row id, and
     # ``comp`` IS that minimum (cc contract) — so the (row_id, canonical)
@@ -113,13 +147,31 @@ def dedup_corpus(
     members = comps.where(F.col("node") != F.col("comp")).select(
         F.col("node").alias(ROW_ID), F.col("comp").alias(_COMP)
     )
-    rep_vals = base.select(F.col(ROW_ID).alias(_COMP), F.col(id_col).alias(_CANON))
+    rep_vals = ingest.select(F.col(ROW_ID).alias(_COMP), F.col(id_col).alias(_CANON))
     remap = rep_vals.join(F.broadcast(members) if small else members, _COMP)
-    if small:
-        remap = F.broadcast(remap)
-    out = base.join(remap, ROW_ID, "left").withColumn(
-        CANONICAL_ID,
-        F.when(F.col(_COMP).isNull(), F.col(id_col)).otherwise(F.col(_CANON)),
+    if ckpt is None:
+        out = base.join(F.broadcast(remap) if small else remap, ROW_ID, "left").withColumn(
+            CANONICAL_ID,
+            F.when(F.col(_COMP).isNull(), F.col(id_col)).otherwise(F.col(_CANON)),
+        )
+        narrow.unpersist()
+        return out.drop(ROW_ID, _COMP, _CANON)
+
+    # Checkpointed: the map is keyed on id_col, not row id. A resumed run
+    # may split the input into other partitions, which stamps other row
+    # ids, while every checkpoint holds the first run's — so the join-back
+    # goes through the id. One deterministic min() per id also keeps an
+    # input with repeated ids from multiplying rows.
+    remap = stage(
+        "05_canonical_map",
+        remap.join(ingest.select(ROW_ID, id_col), ROW_ID)
+        .groupBy(id_col)
+        .agg(F.min(_CANON).alias(CANONICAL_ID)),
     )
     narrow.unpersist()
-    return out.drop(ROW_ID, _COMP, _CANON)
+    return (
+        df.drop(CANONICAL_ID)
+        .join(remap.withColumnRenamed(CANONICAL_ID, _CANON), id_col, "left")
+        .withColumn(CANONICAL_ID, F.coalesce(F.col(_CANON), F.col(id_col)))
+        .drop(_CANON)
+    )

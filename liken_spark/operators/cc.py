@@ -19,23 +19,23 @@ Physical notes:
   to coalesce below defaultParallelism). SINGLE-THREADED-SESSION
   ASSUMPTION, documented at the mutation site.
 - Convergence is detected by an order-independent edge-set signature
-  (count + bit_xor of edge hashes), computed at rounds 1 and 2 and then
-  every ``check_every``-th round — the first round runs "blind" because
-  dedup pair graphs are near-star already (exact/LSH emit star pairs) and
-  almost never converge in 0 rounds; later checks are thinned because each
-  one is a driver barrier (see ``connected_components``).
-- AQE stays ON for the loop (LIKEN_SPARK_CC_AQE=0 disables it as an
-  experiment): the star-round joins read stats-less checkpointed frames,
-  so only AQE's runtime re-planning gets them broadcast joins + coalesced
-  partitions — statically planned they sort-merge-join (measured 2x worse
-  end-to-end at 20k clips despite saving the per-stage submission gaps).
+  (count + bit_xor of edge hashes), computed after every round but the
+  first — the first round runs "blind" because dedup pair graphs are
+  near-star already (LSH emits star pairs) and almost never converge in
+  0 rounds. Comparing the second round's edge set with the normalized
+  input's is still a sound fixed-point test: the star operators strictly
+  decrease a potential function until the fixed point (Kiveris et al. §3).
+- AQE stays on for the loop: the star-round joins read stats-less
+  checkpointed frames, so only AQE's runtime re-planning gets them
+  broadcast joins + coalesced partitions — statically planned they
+  sort-merge-join (measured 2x worse end-to-end at 20k clips, PLANS.md).
 - Each round's frame is localCheckpoint'ed (plan growth across rounds is
   exponential otherwise — the star operators reference the edge frame
-  several times). By default rounds checkpoint NON-eagerly and the
-  per-round signature job doubles as the materializer (one job per round
-  instead of two; measured faster on 240k-edge graphs); earlier rounds'
-  checkpoints are unpersisted as soon as a later round has materialized,
-  so at most two rounds of edge blocks are ever held.
+  several times). Rounds checkpoint NON-eagerly and the per-round
+  signature job doubles as the materializer (one job per round instead of
+  two; measured faster on 240k-edge graphs); earlier rounds' checkpoints
+  are unpersisted as soon as a later round has materialized, so at most
+  two rounds of edge blocks are ever held.
 """
 
 from __future__ import annotations
@@ -171,8 +171,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 40,
-    eager_rounds: bool = False,
-    check_every: int | None = None,
     local_max_edges: int | None = None,
 ) -> DataFrame:
     """(src, dst) pair DataFrame -> (node, comp) assignment DataFrame.
@@ -181,19 +179,6 @@ def connected_components(
     appear in at least one pair are returned — callers default absent rows
     to their own id (matching the reference's ``rep_index.get(i, i)``
     fallback, deduper.py:149).
-
-    ``check_every`` thins the convergence barriers: rounds 1 and 2 are
-    always checked; after that the signature collect runs only every
-    ``check_every``-th round. Skipped-round equality is still a sound
-    convergence proof (the star operators strictly decrease a potential
-    function until the fixed point, Kiveris et al. §3, so an edge set equal
-    to the one ``check_every`` rounds earlier can only be the fixed point).
-    Default 1 — i.e. check every round: the thinning was implemented,
-    measured, and REJECTED as a default (PLANS.md): a signature collect is
-    one stage over an already-materialized frame while each star round it
-    risks adding is ~7 shuffle stages; at 20k clips/local[32] check_every=2
-    cost a reproducible ~1 s (warm 18.5-18.8 vs 17.4-17.6 s). Env
-    ``LIKEN_SPARK_CC_CHECK_EVERY`` overrides for scaling experiments.
 
     ``local_max_edges`` is the adaptive small-graph gate (same philosophy
     as AQE's broadcast threshold): when the normalized edge count — known
@@ -208,24 +193,15 @@ def connected_components(
     scaling report's largest defect). Above the gate — any truly
     corpus-scale pair set, e.g. 10^12-row inputs where edges grow
     linearly with rows — the distributed loop runs unchanged. The result
-    is also a LocalRelation with known stats, so every downstream
-    canonical join gets a planner-chosen broadcast without the stats-less
-    checkpoint workarounds the loop output needs. Default 2_000_000
-    (env ``LIKEN_SPARK_CC_LOCAL_MAX``); 0 forces the distributed loop.
+    is built by ``createDataFrame`` from the driver's pandas frame, a
+    ``Scan ExistingRDD`` with NO size statistics (like the loop's
+    checkpointed output), so the planner does not broadcast it on its own:
+    a caller that joins it against a wide frame adds the broadcast hint
+    itself (``jobs.dedup_corpus``). Default 2_000_000 (env
+    ``LIKEN_SPARK_CC_LOCAL_MAX``); 0 forces the distributed loop.
     """
     import os as _os
     spark = pairs.sparkSession
-    if check_every is None:
-        check_every = int(_os.environ.get("LIKEN_SPARK_CC_CHECK_EVERY", "1"))
-    check_every = max(1, check_every)
-    # LIKEN_SPARK_CC_AQE=0 statically plans the loop's queries (AQE off) —
-    # an experiment knob for the scaling protocol, NOT the default:
-    # measured at 20k clips / local[32], AQE-off DOUBLES the audio
-    # pipeline (39-46 s warm vs ~18.5 s) because the star-round joins
-    # against stats-less checkpointed frames lose AQE's broadcast-join
-    # conversion and partition coalescing; the per-stage submission gaps
-    # AQE adds are far cheaper than the sort-merge joins it removes.
-    disable_aqe = _os.environ.get("LIKEN_SPARK_CC_AQE", "1") == "0"
     owned = _take_scoped_persists()
     e = _normalize(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     e = e.persist()
@@ -241,7 +217,6 @@ def connected_components(
     # this SparkSession would observe the edge-sized value. The rest of the
     # engine shares this assumption (scoped persists, checkpoint manifests).
     session_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    session_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     live: list[DataFrame] = []  # round checkpoints not yet released
     try:
         sig = _signature(e)
@@ -261,9 +236,10 @@ def connected_components(
                 {"node": list(assign.keys()), "comp": list(assign.values())}
             ).astype("int64")
             out = spark.createDataFrame(out_pdf, "node long, comp long")
-            # advisory tag: a LocalRelation assignment is cheap to probe
-            # twice, so keep="first" canonicalization can use the
-            # filter-based representative lookup (executor._apply_comp_df)
+            # advisory tag: this assignment is at most local_max_edges
+            # driver-built rows, cheap to probe twice, so keep="first"
+            # canonicalization can use the filter-based representative
+            # lookup (executor._apply_comp_df)
             out._liken_local_cc = True
             return out
         # floor at the session's core count: fewer partitions than cores
@@ -272,39 +248,30 @@ def connected_components(
         cores = spark.sparkContext.defaultParallelism
         cc_parts = max(4, cores, min(2048, sig[0] // 1_000_000 + 4))
         spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
-        if disable_aqe:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
         # NB: each round MUST truncate the plan (localCheckpoint) — the star
         # operators reference the edge frame several times, so an
         # un-truncated logical plan grows exponentially per round. Rounds
-        # are checkpointed eagerly; the convergence signature doubles as
-        # the materializing job. Dedup pair graphs are near-star already
-        # (exact/LSH emit star pairs), so the first round runs "blind" —
-        # checks start at round 2.
+        # are checkpointed lazily; the convergence signature doubles as
+        # the materializing job, and the first round runs "blind" (module
+        # docstring).
         prev = e
         for i in range(max_iter):
-            e_next = _small_star(_large_star(prev)).localCheckpoint(eager=eager_rounds)
-            live.append(e_next)
-            # rounds 1 and 2 always checked, then every check_every-th
-            # round — each skipped check is one driver barrier saved; see
-            # the docstring for why skipped-round equality stays sound
-            check = i in (1, 2) or (i > 2 and (i - 2) % check_every == 0)
-            sig_next = _signature(e_next) if check else None
-            # Once e_next is materialized (eagerly, or by the signature job
-            # just run), every earlier round's checkpoint blocks are dead —
-            # release them so at most two rounds of edge blocks are ever
-            # held. With eager_rounds=False and no signature yet, earlier
-            # rounds must survive: their lineage is truncated, so
-            # unpersisting before a downstream materialization loses data.
-            if eager_rounds or sig_next is not None:
-                for k in live[:-1]:
-                    k.unpersist()
-                del live[:-1]
-            prev = e_next
-            if sig_next is not None and sig_next == sig:
+            prev = _small_star(_large_star(prev)).localCheckpoint(eager=False)
+            live.append(prev)
+            if i == 0:
+                continue
+            sig_next = _signature(prev)
+            # The signature job just materialized this round, so every
+            # earlier round's checkpoint blocks are dead — release them so
+            # at most two rounds of edge blocks are ever held. Before that
+            # job they must survive: their lineage is truncated, so an
+            # early unpersist loses data.
+            for k in live[:-1]:
+                k.unpersist()
+            del live[:-1]
+            if sig_next == sig:
                 break
-            if sig_next is not None:
-                sig = sig_next
+            sig = sig_next
         else:  # pragma: no cover - defensive
             raise RuntimeError(f"connected components did not converge in {max_iter} rounds")
         e_final = prev
@@ -321,7 +288,6 @@ def connected_components(
         # the edge frame, round checkpoints, or owned scoped persists for
         # the session lifetime.
         spark.conf.set("spark.sql.shuffle.partitions", session_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", session_aqe)
         e.unpersist()
         for k in live:
             k.unpersist()

@@ -95,11 +95,11 @@ def _apply_comp_df(df: DataFrame, comp_df: DataFrame, keep: str) -> DataFrame:
         # (connected_components docstring), so with keep="first" the
         # representative row is exactly the row whose ROW_ID equals its
         # comp — a filter, not a min_by aggregation: one exchange less in
-        # every canonicalize tail. Gated on the CC fast path's
-        # LocalRelation tag: the reps branch re-probes the comps join, and
-        # only a broadcast-sized comps makes that re-probe free (the
-        # distributed loop's stats-less checkpoint output keeps the
-        # aggregate form).
+        # every canonicalize tail. Gated on the CC fast path's tag: the
+        # reps branch re-probes the comps join, which is cheap only for
+        # that small driver-built assignment (a stats-less Scan
+        # ExistingRDD, at most local_max_edges rows); the distributed
+        # loop's output keeps the aggregate form.
         rep = TMP_PREFIX + "rep"
         reps = d.where(F.col(ROW_ID) == F.col(COMP)).select(
             F.col(COMP).alias(COMP + "_r"), F.col(CANONICAL_ID).alias(rep)

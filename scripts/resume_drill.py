@@ -9,11 +9,11 @@ pre-materialized scaling input table (scripts/scaling.py --prep):
                 same sink every leg uses, so the delta to leg 2 isolates
                 checkpoint machinery, not output-write disk throughput);
   2. cold     — scripts/run_pipeline.py with a fresh checkpoint dir: all
-                six narrow stages written + manifests + output;
+                five narrow stages written + manifests + output;
   3. killed   — same command, fresh run-id, SIGKILLed the moment the
                 03_substring_pairs manifest lands (i.e. between the pair
                 passes and connected components);
-  4. resume   — leg 3's exact command re-run to completion: stages 00-03
+  4. resume   — leg 3's identical command re-run to completion: stages 00-03
                 MUST report resumed=true, only CC + canonical map + the
                 output write re-execute.
 
@@ -140,7 +140,7 @@ def orchestrate() -> None:
     # leg 4: resume — identical command, must reuse stages 00-03
     res = _run_pipeline("drill")
     resumed = {s["stage"]: s["resumed"] for s in res["stages"]}
-    for st in ("00_ingest", "01_exact_pairs", "02_lsh_pairs", "03_substring_pairs"):
+    for st in ("00_ingest", "02_lsh_pairs", "03_substring_pairs"):
         assert resumed[st], f"stage {st} recomputed on resume: {resumed}"
     print(json.dumps({"leg": "resume", **res}), flush=True)
 

@@ -11,7 +11,7 @@ Cluster usage (the --py-files contract):
       --checkpoints hdfs:///ckpt/run42 --run-id run42
 
 Reads the clip table (Iceberg table name or parquet path), runs the
-checkpointed exact + MinHash-LSH + substring dedup with global connected
+checkpointed MinHash-LSH + substring dedup with global connected
 components, writes the canonicalized table, and prints stage lineage
 metrics as JSON. Re-running with the same --checkpoints/--run-id resumes
 from the last complete stage.

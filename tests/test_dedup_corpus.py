@@ -1,21 +1,24 @@
-"""jobs.dedup_corpus: a golden canonical-map digest and a Spark-job budget.
+"""jobs.dedup_corpus: a golden canonical-map digest and a Spark-job budget,
+in process and through checkpointed_dedup.
 
 The digests were recorded with the earlier implementation (contiguous row
 ids, a separate exact pass, per-pass pins), so they also prove that the
 single-pin rewrite reproduces its canonical map bit for bit — at 1 and 7
-input partitions and with row ids both recomputed per scan and frozen by a
-persist.
+input partitions, with row ids both recomputed per scan and frozen by a
+persist, and with every stage checkpointed.
 """
 
 from __future__ import annotations
 
 import hashlib
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from liken_spark.jobs import dedup_corpus
 from liken_spark.sources.audio import synth_audio_table
+from liken_spark.sources.checkpoint import StageCheckpointer, checkpointed_dedup
 
 N_CLIPS = 300
 
@@ -53,9 +56,18 @@ def _digest(out) -> str:
     return hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
 
 
-@pytest.mark.parametrize("variant", list(GOLDEN))
-def test_dedup_corpus_golden_digest(spark, variant):
+@pytest.mark.parametrize(
+    "variant,checkpointed",
+    [pytest.param(v, False, id=str(v)) for v in GOLDEN]
+    + [pytest.param(v, True, id=f"checkpointed-{v}") for v in GOLDEN],
+)
+def test_dedup_corpus_golden_digest(spark, tmp_path, variant, checkpointed):
     for partitions in (1, 7):
+        if checkpointed:
+            ckpt = StageCheckpointer(str(tmp_path), uuid.uuid4().hex)
+            out = checkpointed_dedup(spark, _table(spark, variant, partitions), ckpt)
+            assert _digest(out) == GOLDEN[variant], partitions
+            continue
         for deterministic_source in (True, False):
             out = dedup_corpus(
                 _table(spark, variant, partitions), deterministic_source=deterministic_source
@@ -63,19 +75,33 @@ def test_dedup_corpus_golden_digest(spark, variant):
             assert _digest(out) == GOLDEN[variant], (partitions, deterministic_source)
 
 
-def test_dedup_corpus_job_budget(spark):
-    """One call plus its noop write runs in at most 20 Spark jobs: one pin
-    aggregate, the pair/CC plan, and the broadcast join-back."""
+def _count_jobs(spark, run) -> int:
+    """Spark jobs submitted by ``run()`` over a cached 300-clip input."""
     df = synth_audio_table(spark, N_CLIPS, 1, with_audio=False).persist()
     df.count()
     sc = spark.sparkContext
-    group = "dedup_corpus_job_budget"
-    sc.setJobGroup(group, "one dedup_corpus call and its write")
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "one dedup call and its write")
     try:
-        dedup_corpus(df).write.format("noop").mode("overwrite").save()
+        run(df).write.format("noop").mode("overwrite").save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         df.unpersist()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 20, len(jobs)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_corpus_job_budget(spark):
+    """One call plus its noop write runs in at most 20 Spark jobs: one pin
+    aggregate, the pair/CC plan, and the broadcast join-back."""
+    jobs = _count_jobs(spark, dedup_corpus)
+    assert 0 < jobs <= 20, jobs
+
+
+def test_checkpointed_dedup_job_budget(spark, tmp_path):
+    """checkpointed_dedup adds only the five stage writes, read-backs and
+    manifests to the same pass: one call plus its noop write runs in at
+    most 53 Spark jobs."""
+    ckpt = StageCheckpointer(str(tmp_path), uuid.uuid4().hex)
+    jobs = _count_jobs(spark, lambda df: checkpointed_dedup(spark, df, ckpt))
+    assert 0 < jobs <= 53, jobs

@@ -1,5 +1,5 @@
-"""Round-3 regressions: prefilter candidate semantics, CC round modes,
-sidecar-oracle plumbing."""
+"""Round-3 regressions: prefilter candidate semantics, CC loop vs local
+path, substring candidate restructure."""
 
 from __future__ import annotations
 
@@ -48,7 +48,10 @@ def test_lsh_candidate_pairs_big_bucket_falls_back_to_star(spark):
     assert got == {(0, i) for i in range(1, n)}  # n-1 star edges, root 0
 
 
-def test_cc_eager_and_noneager_rounds_agree(spark):
+def test_cc_loop_and_local_paths_agree(spark):
+    """The star-round loop (local_max_edges=0) and the driver union-find
+    give identical labels on a 4.7k-edge graph of long chains plus
+    scattered cross links."""
     e1 = spark.range(2_000).select(
         (F.col("id") * 3).alias("src"), (F.col("id") * 3 + 1).alias("dst")
     )
@@ -59,9 +62,11 @@ def test_cc_eager_and_noneager_rounds_agree(spark):
         ((F.col("id") * 17) % 6000).alias("src"), ((F.col("id") * 31) % 6000).alias("dst")
     )
     pairs = e1.union(e2).union(e3)
-    a = {(r["node"], r["comp"]) for r in connected_components(pairs, eager_rounds=True).collect()}
-    b = {(r["node"], r["comp"]) for r in connected_components(pairs, eager_rounds=False).collect()}
-    assert a == b and len(a) > 0
+    loop = {
+        (r["node"], r["comp"]) for r in connected_components(pairs, local_max_edges=0).collect()
+    }
+    local = {(r["node"], r["comp"]) for r in connected_components(pairs).collect()}
+    assert loop == local and len(loop) > 0
 
 
 def test_substring_candidate_restructure_pairs_unchanged(spark):
