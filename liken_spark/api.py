@@ -31,6 +31,7 @@ from liken_spark.plans.pipeline import (
     validate_columns,
     validate_keep,
 )
+from liken_spark.session import fits_broadcast, spread_to_cores
 
 
 class Dedupe:
@@ -41,8 +42,6 @@ class Dedupe:
         *,
         spark_session: SparkSession | None = None,
         collect_ordered: bool = True,
-        broadcast_threshold: int = 20_000_000,
-        broadcast_bytes: int = 256 << 20,
         deterministic_source: bool = False,
     ):
         if not isinstance(df, DataFrame):
@@ -63,13 +62,10 @@ class Dedupe:
         # input-order sort of the output (a full-data sort at 100x scale
         # purely to restore cosmetic row order) and force-broadcasts the
         # canonical map so the wide payload never shuffles (the
-        # jobs.dedup_corpus behavior). The broadcast is gated on BOTH a row
-        # cap and an estimated-bytes cap: canonical_id can be a wide string
-        # column (id=...), and a multi-GB broadcast OOMs the driver and
-        # every executor — rows alone is not a size.
+        # jobs.dedup_corpus behavior) when it fits session.fits_broadcast:
+        # canonical_id can be a wide string column (id=...), so the gate
+        # is estimated bytes, not rows.
         self._collect_ordered = collect_ordered
-        self._broadcast_threshold = broadcast_threshold
-        self._broadcast_bytes = broadcast_bytes
 
     # -- collection management -------------------------------------------
     def apply(self, deduper) -> "Dedupe":
@@ -146,21 +142,11 @@ class Dedupe:
                         needed.append(c)
         narrow = full.select(ROW_ID, CANONICAL_ID, *needed)
         # Similarity passes do their heavy per-row work (signature UDFs,
-        # window hashing, gram explodes) BEFORE any exchange, so their
-        # parallelism is the INPUT partition count — a small cached table
-        # (one parquet split) runs every expensive pass on one core. When
-        # the input is narrower than the session's core count, repartition
-        # the narrow frame once (row ids are already assigned above, so
-        # this is purely physical). At scale input partitions >= cores and
-        # this is a no-op; bucket/predicate-only plans skip it because
+        # window hashing, gram explodes) BEFORE any exchange, so spread the
+        # narrow frame first; bucket/predicate-only plans skip it because
         # their first exchange (the groupBy) redistributes anyway.
-        has_pairs = any(
-            isinstance(u.spec, PairsDeduper) for step in steps for u in step
-        )
-        if has_pairs:
-            cores = full.sparkSession.sparkContext.defaultParallelism
-            if narrow.rdd.getNumPartitions() < cores:
-                narrow = narrow.repartition(cores)
+        if any(isinstance(u.spec, PairsDeduper) for step in steps for u in step):
+            narrow = spread_to_cores(narrow)
         narrow = run_steps(narrow, steps, keep)
         if drop_duplicates:
             narrow = drop_duplicates_by_canonical(narrow, keep)
@@ -186,10 +172,7 @@ class Dedupe:
             if canon_numeric and n_rows is not None:
                 # n_rows can only overestimate (drop_duplicates shrinks the
                 # map), so the gate errs toward NOT broadcasting — safe.
-                if (
-                    n_rows <= self._broadcast_threshold
-                    and n_rows * 36.0 <= self._broadcast_bytes
-                ):
+                if fits_broadcast(n_rows, 8):
                     canon_map = F.broadcast(canon_map)
             else:
                 canon_map = canon_map.localCheckpoint(eager=False)
@@ -200,11 +183,7 @@ class Dedupe:
                         F.lit(0.0),
                     ).alias("w"),
                 ).collect()[0]
-                est_bytes = int(stats["n"]) * (28 + float(stats["w"]))
-                if (
-                    stats["n"] <= self._broadcast_threshold
-                    and est_bytes <= self._broadcast_bytes
-                ):
+                if fits_broadcast(int(stats["n"]), float(stats["w"])):
                     canon_map = F.broadcast(canon_map)
         df = full.drop(CANONICAL_ID).join(canon_map, ROW_ID)
         if drop_canonical_id:
@@ -269,13 +248,11 @@ def dedupe(
     *,
     spark_session: SparkSession | None = None,
     collect_ordered: bool = True,
-    broadcast_threshold: int = 20_000_000,
     deterministic_source: bool = False,
 ) -> Dedupe:
     return Dedupe(
         df,
         spark_session=spark_session,
         collect_ordered=collect_ordered,
-        broadcast_threshold=broadcast_threshold,
         deterministic_source=deterministic_source,
     )

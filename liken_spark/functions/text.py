@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from liken_spark.preprocess import NLTK_ENGLISH_STOPWORDS
+from liken_spark.session import spread_to_cores
 
 # ---------------------------------------------------------------------------
 # token counting
@@ -165,13 +166,8 @@ def fingerprint64(col: Column) -> Column:
 
 
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    # map-only plan: its parallelism is the input partition count, so a
-    # small cached table (one parquet split) would run every regex + the
-    # langid UDF on one core. Repartition up to the session width when the
-    # input is narrower; no-op at scale (partitions >= cores).
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        df = df.repartition(cores)
+    # map-only plan: every regex + the langid UDF run per input partition
+    df = spread_to_cores(df)
     c = F.col(text_col)
     feats = quality_features(c)
     return df.select(

@@ -39,6 +39,7 @@ from liken_spark.ids import freeze_ids
 from liken_spark.operators.cc import connected_components
 from liken_spark.operators.dedupers import LshSpec
 from liken_spark.operators.textdedup import SubstringSpec
+from liken_spark.session import fits_broadcast, spread_to_cores
 
 if TYPE_CHECKING:
     from liken_spark.sources.checkpoint import StageCheckpointer
@@ -90,13 +91,8 @@ def dedup_corpus(
     sub = SubstringSpec(min_len=substring_min_len)
 
     ingest = stage("00_ingest", base.select(ROW_ID, id_col, text_col))
-    narrow = ingest
-    # the signature UDF runs before any exchange, so its parallelism is
-    # the input partition count — spread a narrow input once (no-op at
-    # scale where partitions >= cores)
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < cores:
-        narrow = narrow.repartition(cores)
+    # the signature UDF runs before any exchange
+    narrow = spread_to_cores(ingest)
     narrow = narrow.withColumn(_BANDS, lsh.bands_column(F.col(text_col))).persist()
     # The pin: the LSH and substring branches both read `narrow`, and AQE
     # runs their jobs concurrently — a not-yet-built cache is silently
@@ -138,12 +134,12 @@ def dedup_corpus(
     # keep="first": canonical = id at the component's minimum row id, and
     # ``comp`` IS that minimum (cc contract) — so the (row_id, canonical)
     # remap covers dup-cluster members only; every other row keeps its own
-    # id. Below the 256MB byte gate (estimated over ALL rows, an upper
+    # id. Within the broadcast gate (estimated over ALL rows, an upper
     # bound on both the member list and the remap) both are broadcast: the
     # CC output carries no size statistics, and the wide payload never
     # shuffles. Above it the planner shuffles both sides once — the
     # unavoidable floor.
-    small = stats["n"] * (28 + stats["w"]) <= (256 << 20)
+    small = fits_broadcast(stats["n"], stats["w"])
     members = comps.where(F.col("node") != F.col("comp")).select(
         F.col("node").alias(ROW_ID), F.col("comp").alias(_COMP)
     )

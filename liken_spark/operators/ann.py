@@ -19,6 +19,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from liken_spark.session import spread_to_cores
+
 
 def _norm_col(vec: str):
     v = F.transform(F.col(vec), lambda x: x.cast("double"))
@@ -30,22 +32,15 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition to the session core count when the input is narrower —
-    the signature UDF / normalization run before any exchange, so their
-    parallelism is the input partition count (a one-split cached table
-    would run them on one core). No-op at scale (partitions >= cores)."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        return df.repartition(cores)
-    return df
-
-
 def brute_force_topk(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", k: int = 5
 ) -> DataFrame:
     """Exact top-k cosine neighbors for every row (self excluded)."""
-    d = _spread(df).select(F.col(id_col).alias("i"), _norm_col(vec_col).alias("v")).persist()
+    d = (
+        spread_to_cores(df)
+        .select(F.col(id_col).alias("i"), _norm_col(vec_col).alias("v"))
+        .persist()
+    )
     # eager pin: the self-join's two sides (and AQE's runtime broadcast
     # builds) are concurrent consumers — an unmaterialized cache is
     # silently recomputed once per consumer (see cc.scoped_persist).
@@ -148,7 +143,7 @@ def lsh_topk(
     cosine rerank on candidates. Bucket sizes stay near n/2^(planes/bands)
     per table, so the candidate join is linear-ish; hot buckets are bounded
     by the signature entropy of the data."""
-    d = _keyed_vectors(_spread(df), id_col, vec_col, n_planes, bands, seed, dim).persist()
+    d = _keyed_vectors(spread_to_cores(df), id_col, vec_col, n_planes, bands, seed, dim).persist()
     # eager pin (measured: 4 concurrent AQE broadcast builds each re-ran
     # the signature UDF pass on the unmaterialized cache — 4 x 0.9 s at
     # sf0.1; one pinning count makes it one pass + 3 cache reads).

@@ -1,17 +1,46 @@
-"""SparkSession builder tuned for this engine.
+"""SparkSession builder tuned for this engine, and the two physical
+policies every query path shares.
 
 Defaults favor the engine's workload: AQE on (skew-join + partition
 coalescing cover moderate band skew at runtime), Arrow enabled for every
 pandas-UDF kernel, a shuffle-partition count sized from the
 parallelism, and a codegen cache that a repeated query always hits. All
 knobs are overridable.
+
+- ``spread_to_cores``: the repartition guard for map-side heavy work;
+- ``fits_broadcast``: the byte gate for broadcasting a row-keyed map.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# Broadcast budget of a (row key, value) map: a multi-GB broadcast OOMs the
+# driver and every executor, so the gate is estimated bytes, never rows.
+BROADCAST_BYTES = 256 << 20
+
+
+def spread_to_cores(df: DataFrame) -> DataFrame:
+    """Repartition to the session core count when the input is narrower.
+
+    Map-side work (signature UDFs, regexes, vector normalization) runs
+    before any exchange, so its parallelism is the input partition count:
+    a one-split cached table would run it on one core. Row ids must be
+    assigned before this, since it is purely physical. No-op at scale,
+    where partitions >= cores."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < cores:
+        return df.repartition(cores)
+    return df
+
+
+def fits_broadcast(n_rows: int, avg_bytes: float) -> bool:
+    """Whether ``n_rows`` rows of a map with ``avg_bytes`` value width fit
+    the broadcast budget. 28 bytes per row covers the long key plus the
+    row overhead of the broadcast hash relation."""
+    return n_rows * (28 + avg_bytes) <= BROADCAST_BYTES
 
 
 def get_spark(

@@ -30,21 +30,24 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from liken_spark.jobs import dedup_corpus
 
 
-def _checksum(df: DataFrame) -> tuple[int, int]:
-    row = df.agg(
-        F.count(F.lit(1)).alias("c"),
-        F.coalesce(F.expr(f"bit_xor(xxhash64({', '.join(df.columns)}))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["c"]), int(row["h"])
-
-
-def _partition_lineage(df: DataFrame) -> list[dict]:
+def _scan_stats(df: DataFrame) -> tuple[int, int, list[dict]]:
+    """(row count, XOR checksum, per-partition lineage) from ONE
+    per-partition aggregate: the driver sums the counts and XOR-folds the
+    partition hashes, which equals the global ``bit_xor``."""
     rows = (
         df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("rows"))
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.coalesce(F.expr(f"bit_xor(xxhash64({', '.join(df.columns)}))"), F.lit(0)).alias("h"),
+        )
         .collect()
     )
-    return [{"partition": int(r["pid"]), "rows": int(r["rows"])} for r in sorted(rows, key=lambda r: r["pid"])]
+    lineage, cnt, h = [], 0, 0
+    for r in sorted(rows, key=lambda r: r["pid"]):
+        lineage.append({"partition": int(r["pid"]), "rows": int(r["rows"])})
+        cnt += int(r["rows"])
+        h ^= int(r["h"])
+    return cnt, h, lineage
 
 
 @dataclass
@@ -84,7 +87,7 @@ class StageCheckpointer:
                 manifest = json.load(f)
             out = spark.read.parquet(data_path)
             if self.verify_checksum_on_resume:
-                cnt, h = _checksum(out)
+                cnt, h, _ = _scan_stats(out)
                 if [cnt, h] != manifest["checksum"]:
                     raise RuntimeError(
                         f"stage {name!r}: checkpoint corrupt (checksum mismatch)"
@@ -95,8 +98,7 @@ class StageCheckpointer:
         df.write.mode("overwrite").parquet(data_path)
 
         out = spark.read.parquet(data_path)
-        cnt, h = _checksum(out)
-        lineage = _partition_lineage(out)
+        cnt, h, lineage = _scan_stats(out)
         manifest = {
             "complete": True,
             "stage": name,

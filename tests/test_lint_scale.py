@@ -4,7 +4,8 @@
   via ``.to_numpy()`` column access — iterrows materializes a Series per
   row and is the classic 10-100x pandas-UDF slowdown);
 - no ``collect()`` loops in operator hot paths other than the documented
-  driver-side aggregates (row-id offsets, CC convergence signature).
+  driver-side aggregates (row-id offsets, CC convergence signature);
+- one definition each of the repartition guard and the broadcast budget.
 """
 
 from __future__ import annotations
@@ -73,3 +74,24 @@ def test_windows_only_per_row_bounded():
         "non-allowlisted Window.partitionBy in engine source (hot-key "
         f"single-task risk — use groupBy+min_by/max_by+join): {offenders}"
     )
+
+
+# One definition of each shared physical policy (both in session.py): the
+# repartition guard (spread_to_cores) and the broadcast byte budget
+# (fits_broadcast). A second copy of a policy drifts from the first.
+def _occurrences(needle: str) -> list[str]:
+    return [
+        f"{p.relative_to(SRC)}:{i}"
+        for p in _sources()
+        for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        if needle in line
+    ]
+
+
+def test_repartition_guard_defined_once():
+    assert len(_occurrences("getNumPartitions() <")) == 1, _occurrences("getNumPartitions() <")
+
+
+def test_broadcast_budget_defined_once():
+    assert len(_occurrences("256 << 20")) == 1, _occurrences("256 << 20")
+    assert _occurrences("broadcast_threshold") == []

@@ -1,13 +1,8 @@
 """Structured-Streaming incremental dedup (stateful keep="first" online,
-resumable via checkpointLocation) and multimodal decode plumbing."""
+resumable via checkpointLocation)."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from liken_spark.operators.multimodal import audio_features, frame_sample, image_features
-from liken_spark.sources import audio
 from liken_spark.streaming.incremental import streaming_canonicalize
 
 
@@ -50,77 +45,3 @@ def test_streaming_canonicalize_resumes_state(spark, tmp_path):
     got2 = _run_batch(spark, src, ckpt, out)
     assert got2[("a", "u9")] == "u1"
     assert got2[("c", "u4")] == "u4"
-
-
-def test_audio_features_real_decode(spark):
-    clips = audio.synth_audio_table(spark, 10, seed=42)
-    feats = audio_features(clips).collect()
-    assert len(feats) == 10
-    for r in feats:
-        assert r["n_samples"] > 0
-        assert 0.0 < r["rms"] < 1.0
-        assert 0.0 <= r["zero_cross_rate"] <= 1.0
-
-
-def test_image_features_fake_decoder(spark):
-    rows = [("img0", b"payload-a", 64, 48), ("img1", b"payload-b", 32, 32)]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary, width int, height int")
-    feats = {r["image_id"]: r for r in image_features(df, fake=True).collect()}
-    assert feats["img0"]["width"] == 64 and feats["img0"]["height"] == 48
-    assert feats["img0"]["n_channels"] == 3
-    assert 0 <= feats["img0"]["mean_luma"] <= 255
-    # deterministic: same payload -> same phash
-    again = {r["image_id"]: r for r in image_features(df, fake=True).collect()}
-    assert feats["img0"]["phash"] == again["img0"]["phash"]
-
-
-def test_image_features_stub_raises_without_fake(spark):
-    df = spark.createDataFrame(
-        [("img0", b"x", 8, 8)], "image_id string, bytes binary, width int, height int"
-    )
-    with pytest.raises(Exception, match="NotImplementedError|PIL|image decode"):
-        image_features(df, fake=False).collect()
-
-
-def test_frame_sample_stub(spark):
-    df = spark.createDataFrame([("v0", b"x")], "video_id string, bytes binary")
-    with pytest.raises(Exception, match="NotImplementedError|ffmpeg|frame"):
-        frame_sample(df).collect()
-
-
-def test_image_features_real_bmp_ppm(spark):
-    """REAL image decode path: BMP and PPM payloads produce exact
-    dimensions and luma (no PIL needed)."""
-    import numpy as np
-
-    from liken_spark.sources.image import bmp_encode, ppm_encode
-
-    rng = np.random.default_rng(11)
-    a = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
-    b = rng.integers(0, 256, size=(9, 7, 3), dtype=np.uint8)
-    rows = [("bmp0", bytearray(bmp_encode(a)), 24, 16), ("ppm0", bytearray(ppm_encode(b)), 7, 9)]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary, width int, height int")
-    feats = {r["image_id"]: r for r in image_features(df).collect()}
-    assert (feats["bmp0"]["width"], feats["bmp0"]["height"]) == (24, 16)
-    assert (feats["ppm0"]["width"], feats["ppm0"]["height"]) == (7, 9)
-    expect_luma = float((a.astype(np.float64) @ np.array([0.299, 0.587, 0.114])).mean())
-    assert abs(feats["bmp0"]["mean_luma"] - expect_luma) < 1e-9
-
-
-def test_image_resize_real(spark):
-    import numpy as np
-
-    from liken_spark.operators.multimodal import image_resize
-    from liken_spark.sources.image import bmp_decode, bmp_encode
-
-    rng = np.random.default_rng(12)
-    a = rng.integers(0, 256, size=(32, 48, 3), dtype=np.uint8)
-    df = spark.createDataFrame(
-        [("im0", bytearray(bmp_encode(a)))], "image_id string, bytes binary"
-    )
-    out = image_resize(df, out_w=8, out_h=8).collect()
-    assert len(out) == 1 and (out[0]["width"], out[0]["height"]) == (8, 8)
-    resized = bmp_decode(bytes(out[0]["bytes"]))
-    yi = (np.arange(8) * 32) // 8
-    xi = (np.arange(8) * 48) // 8
-    assert np.array_equal(resized, a[yi][:, xi])
